@@ -7,8 +7,9 @@ instrumentation the optimization round needs:
   discipline, so a measurement isn't polluted by JVM state from earlier lines;
 - noop-sink timing (`--sink noop`) per guide §1.4 (the frozen bench uses
   .count(); both are reported so the two methodologies can be compared);
-- phase breakdown for the cover-tree build (COVERGRID_TRACE) and the routed
-  tree query;
+- phase breakdown for the cover-tree build and the routed tree query (the
+  build's phase timers are `tools/profile_build.py`, which sets
+  `covertree._TRACE`);
 - plan capture: `--plans DIR` writes `.explain("formatted")` for each timed
   query into DIR/<query>.txt (the judge-facing plan evidence).
 

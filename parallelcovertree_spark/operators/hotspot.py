@@ -350,22 +350,22 @@ def nn_distance_stats(
     (cell_id, n, sum_nn_micro, max_nn_micro, mean_nn_micro, ce_ratio).
 
     The classic point-pattern dispersion analytic: each point's 1-NN
-    distance (exact, via the grid kNN join — the reference's brute-force
+    distance (exact, via the block-kernel kNN join — the reference's brute-force
     ground-truth semantics, programs/epsilon_graph.cpp kNN tests), grouped
     by the point's tile. ``ce_ratio`` is Clark & Evans 1954: observed mean
     NN distance over the expected mean 0.5/sqrt(density) for a Poisson
     process of the cell's density n/res² — ~1 random, <1 clustered,
     >1 dispersed.
 
-    Scale shape: the kNN join is the certified adaptive-ring grid plan
+    Scale shape: the kNN join is the certified adaptive-radius block plan
     (never all-pairs); coordinates re-attach through two id-keyed hash
     equi-joins; the terminal aggregate is tile-keyed. Distances are
     quantized to BIGINT micro-units before summing (exact, associative);
     mean and CE ratio are fixed expression trees over those integers.
     """
-    from parallelcovertree_spark.operators.knn import knn_join
+    from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 
-    nn = knn_join(pts, k=1, id_col=id_col, x=x, y=y)
+    nn = knn_join_block_kernel(pts, k=1, id_col=id_col, x=x, y=y)
     a = pts.select(
         F.col(id_col).alias("src"),
         F.col(x).cast("double").alias("ax"),

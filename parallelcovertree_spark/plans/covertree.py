@@ -417,6 +417,10 @@ def _merge_partials(partials) -> tuple[dict, dict]:
     return far, counts
 
 
+# thread count of the driver-resident rounds (at most; see _DriverRounds)
+DRIVER_THREADS = 8
+
+
 class _DriverRounds:
     """Driver-resident global phase for states under the size threshold —
     the broadcast-join analog of keeping a small side local. The state
@@ -436,13 +440,11 @@ class _DriverRounds:
     tail update + regroup were ~1.1 s of the 1.35 s round total,
     single-threaded)."""
 
-    def __init__(self, blk: dict, n_threads: int | None = None):
+    def __init__(self, blk: dict):
         self.blk = blk
         n = len(blk["pid"])
-        if n_threads is None:
-            n_threads = int(os.environ.get("COVERGRID_DRIVER_THREADS", "8"))
         # ≥128k rows per chunk: below that, thread dispatch beats the win
-        k = max(1, min(int(n_threads), n // 131072)) if n else 1
+        k = max(1, min(DRIVER_THREADS, n // 131072)) if n else 1
         bounds = np.linspace(0, n, k + 1, dtype=np.int64)
         # slice views alias self.blk: in-place op application on a view IS
         # application on the full array, so blk stays the single source of
@@ -572,7 +574,7 @@ def _points_to_driver(pts: DataFrame) -> tuple[dict, int, float, float]:
     }, root_pid, rx, ry
 
 
-_TRACE = os.environ.get("COVERGRID_TRACE", "") != ""
+_TRACE = False  # print per-phase build timings (tools/profile_build.py)
 
 
 def _trace(label: str, t0: float) -> None:

@@ -332,6 +332,15 @@ _GRID_DIRS = np.array([(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
                       dtype=np.int64)
 
 
+def grid_cell_side(radius: float) -> float:
+    """Cell side of a grid radius search that probes a 1-ring of cells:
+    radius·(1+1e-9). The margin makes the 1-ring provably cover every
+    within-radius candidate even under worst-case rounding of the bucketing
+    division (a true hit then has quotient gap strictly < 1); the hit test
+    stays d² ≤ radius²."""
+    return float(radius) * (1.0 + 1e-9)
+
+
 def grid_radius_pairs(
     px: np.ndarray, py: np.ndarray,
     qx: np.ndarray, qy: np.ndarray,
@@ -346,14 +355,10 @@ def grid_radius_pairs(
     (``radii_query_np``) at a fraction of its cost for small radii: the
     traversal pays ~10 frontier iterations of ragged gathers per tree level,
     the grid pays three numpy passes total (measured 30× on the routed
-    ε-query's per-hub finish at 1M points).
-
-    Cell side is radius·(1+1e-9): the margin makes the 1-ring provably cover
-    every within-radius candidate even under worst-case rounding of the
-    bucketing division (a true hit then has quotient gap strictly < 1).
+    ε-query's per-hub finish at 1M points). Cells are ``grid_cell_side``.
     """
     r = float(radius)
-    s = r * (1.0 + 1e-9)
+    s = grid_cell_side(r)
     if not len(px) or not len(qx):
         z = np.empty(0, dtype=np.int64)
         return z, z

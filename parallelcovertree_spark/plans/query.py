@@ -16,8 +16,6 @@ DistCoverTree.cpp:657-677).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -27,8 +25,13 @@ from parallelcovertree_spark.functions.geo import dist2_expr
 from parallelcovertree_spark.plans.covertree import CoverTreeModel
 from parallelcovertree_spark.plans.local_tree import (
     TreeArrays,
+    grid_cell_side,
     grid_radius_pairs,
 )
+
+# stage 2 of the routed query finishes as a broadcast join up to this many
+# queries and as a cogroup above it (see ``tree_radius_join``)
+ROUTE_BCAST_QUERIES = 50_000
 
 
 def _top_tree_arrays(model: CoverTreeModel) -> tuple[TreeArrays, np.ndarray, np.ndarray]:
@@ -176,10 +179,12 @@ def tree_radius_join(
     # broadcast hash joins in whole-stage codegen (guide §3.1/§2.4 — no
     # shuffle, no Python, no checkpoint):
     # (a) HITS: the stage-1 point set (non-stop top-vertex points, a few
-    #     hundred rows) exploded to its 1-ring at cell size r — each query
-    #     probes its own cell, exact d² ≤ r² filter. Identical predicate and
-    #     float32-rounded coordinates as the former kernel (the tree stores
-    #     float32; the literal table carries those exact values widened).
+    #     hundred rows) exploded to its 1-ring at cell size
+    #     ``grid_cell_side(r)`` (r plus the 1e-9 rounding margin the stage-2
+    #     finishes use too) — each query probes its own cell, exact d² ≤ r²
+    #     filter. Identical predicate and float32-rounded coordinates as the
+    #     former kernel (the tree stores float32; the literal table carries
+    #     those exact values widened).
     # (b) ROUTES: the hub-box rectangle stab — the same coarse stab grid is
     #     built driver-side in numpy (each inflated box covers ≤ 2×2 cells),
     #     shipped as a literal (stab_key → box) table; queries probe ONE
@@ -191,6 +196,7 @@ def tree_radius_join(
 
     rm = r + 1e-9 * max(1.0, r)
     rm2 = rm * rm
+    cs = grid_cell_side(r)
     s1_df = spark.createDataFrame(
         pd.DataFrame({
             "pid": stage1_pids,
@@ -199,9 +205,9 @@ def tree_radius_join(
         }),
         "pid long, px double, py double",
     )
-    ring = explode_k_ring(s1_df, r, k=1, x="px", y="py", out="_cell")
+    ring = explode_k_ring(s1_df, cs, k=1, x="px", y="py", out="_cell")
     hits_top = (
-        with_cell(q, r, x="qx", y="qy", out="_cell")
+        with_cell(q, cs, x="qx", y="qy", out="_cell")
         .join(F.broadcast(ring), "_cell")
         .where(dist2_expr("qx", "qy", "px", "py") <= F.lit(r * r))
         .select("qid", "pid")
@@ -293,19 +299,15 @@ def tree_radius_join(
     # the pre-partitioned checkpoint (no exchange, no Python), exact
     # d² ≤ r² filter. Identical pair set: a member within r of a routed
     # query lies in its ring; members are unique rows; stage-1 points are
-    # dropped by the same anti-join the leaf path uses. Requires the unique
-    # members table (local_trees has multiple vertex rows per point).
+    # dropped by the same anti-join the leaf path uses.
     # The one-count probe of q is a codegen agg over the (typically cached /
     # filter-derived) query source — cheap against the cogroup it avoids.
-    # Default 50k: the broadcast side is the ring-exploded route set
-    # (~2 routes/query x 9 cells x ~44 B), so 50k queries is a ~40 MB
-    # broadcast — comfortably inside executor memory at any cluster size,
-    # while 100k+ starts to be a real per-executor allocation.
-    bcast_q_threshold = int(
-        os.environ.get("COVERGRID_ROUTE_BCAST_QUERIES", "50000")
-    )
-    if getattr(model, "members", None) is not None and q.count() <= bcast_q_threshold:
-        ring_route = explode_k_ring(to_route, r, k=1, x="qx", y="qy", out="_mcell")
+    # ROUTE_BCAST_QUERIES = 50k: the broadcast side is the ring-exploded
+    # route set (~2 routes/query x 9 cells x ~44 B), so 50k queries is a
+    # ~40 MB broadcast — comfortably inside executor memory at any cluster
+    # size, while 100k+ starts to be a real per-executor allocation.
+    if q.count() <= ROUTE_BCAST_QUERIES:
+        ring_route = explode_k_ring(to_route, cs, k=1, x="qx", y="qy", out="_mcell")
         s1df = spark.createDataFrame(
             pd.DataFrame({"s1_pid": stage1_pids}), "s1_pid long"
         )
@@ -314,7 +316,7 @@ def tree_radius_join(
             .join(F.broadcast(s1df),
                   F.col("point_id") == F.col("s1_pid"), "left_anti")
         )
-        mem = with_cell(mem, r, x="px", y="py", out="_mcell")
+        mem = with_cell(mem, cs, x="px", y="py", out="_mcell")
         hits_local = (
             mem.alias("m")
             .join(
@@ -329,11 +331,6 @@ def tree_radius_join(
             F.col("qid").alias("src"), F.col("pid").alias("dst")
         )
         return out
-
-    # the members table holds one row per member by construction; the
-    # local_trees fallback (hand-built models) has one row per VERTEX, so a
-    # chain point appears several times and needs the unique pass
-    tree_rows_unique = getattr(model, "members", None) is not None
 
     def stage2(routes_tb, tree_tb):
         import pyarrow as pa
@@ -361,18 +358,12 @@ def tree_radius_join(
         # is now free (unique points ⇒ no chain-duplicate dedupe), and the
         # stage-1-tested points are dropped up-front instead of post-hoc.
         pids = col(tree_tb, "point_id")
-        if tree_rows_unique:
-            keep = ~np.isin(pids, s1pids)
-            upids = pids[keep]
-            first = np.flatnonzero(keep)
-        else:
-            upids, first = np.unique(pids, return_index=True)
-            keep = ~np.isin(upids, s1pids)
-            upids, first = upids[keep], first[keep]
+        keep = ~np.isin(pids, s1pids)
+        upids = pids[keep]
         if not len(upids):
             return empty()
-        px = col(tree_tb, "px")[first].astype(np.float64)
-        py = col(tree_tb, "py")[first].astype(np.float64)
+        px = col(tree_tb, "px")[keep].astype(np.float64)
+        py = col(tree_tb, "py")[keep].astype(np.float64)
         hq, hp = grid_radius_pairs(
             px, py, col(routes_tb, "qx"), col(routes_tb, "qy"), r,
         )
@@ -394,13 +385,11 @@ def tree_radius_join(
             ),
         })
 
-    # cogroup against the narrow pre-partitioned members table when the
-    # model carries one (4 columns, unique rows, exchange/sort-free side);
-    # the full vertex table remains the fallback for hand-built models
-    tree_side = model.members if getattr(model, "members", None) is not None else model.local_trees
+    # cogroup against the narrow pre-partitioned members table (4 columns,
+    # unique rows, exchange/sort-free side)
     hits_local = (
         to_route.groupBy("hub_id")
-        .cogroup(tree_side.groupBy("hub_id"))
+        .cogroup(model.members.groupBy("hub_id"))
         .applyInArrow(stage2, "qid long, pids array<long>")
         .select("qid", F.explode("pids").alias("pid"))
     )
@@ -434,14 +423,17 @@ def tree_knn(
     radius (the reference's kNN ground truth is brute force,
     programs/epsilon_graph.cpp:113-118; this is the tree-indexed equivalent).
     Returns (src, nbr_rank, dst)."""
-    from parallelcovertree_spark.operators.knn import estimate_radius
+    from parallelcovertree_spark.operators.knn import (
+        estimate_radius,
+        knn_straggler_finish,
+    )
 
     q = queries.select(
         F.col(qid_col).cast("long").alias("id"),
         F.col(x).cast("double").alias("x"),
         F.col(y).cast("double").alias("y"),
     ).persist()
-    r = float(r0) if r0 is not None else estimate_radius(q, k + 1)
+    r = float(r0) if r0 is not None else estimate_radius(q, k + 1)[1]
     pts = model.points.select(
         F.col("id").alias("dst"),
         F.col("x").cast("double").alias("tx"),
@@ -482,25 +474,19 @@ def tree_knn(
         r *= 2.0
 
     if remaining != 0:
-        # exact fallback for queries still uncertified after max_rounds
+        # exact finish for queries still uncertified after max_rounds
         # (k ≥ available neighbors, or an r0 underestimate needing more than
-        # 2^max_rounds growth): brute-force window top-k over the broadcast
-        # straggler set — same straggler discipline as knn_join, so no query
-        # is ever silently dropped.
-        cand = (
-            F.broadcast(unresolved.withColumnRenamed("id", "src"))
-            .join(pts, F.col("src") != F.col("dst"))
-            .select(
-                "src", "dst",
-                ((F.col("x") - F.col("tx")) ** 2 + (F.col("y") - F.col("ty")) ** 2).alias("d2"),
-            )
+        # 2^max_rounds growth): the block kernel's straggler finish over the
+        # whole corpus, so no query is ever silently dropped.
+        corpus = pts.select(
+            F.col("dst").cast("long").alias("pid"),
+            F.col("tx").alias("px"), F.col("ty").alias("py"),
         )
-        w = Window.partitionBy("src").orderBy(F.col("d2").asc(), F.col("dst").asc())
+        strag = unresolved.select(
+            F.col("id").alias("pid"), F.col("x").alias("px"), F.col("y").alias("py")
+        )
         parts.append(
-            cand.withColumn("nbr_rank", F.row_number().over(w))
-            .where(F.col("nbr_rank") <= k)
-            .select("src", "nbr_rank", "dst")
-            .localCheckpoint(eager=True)
+            knn_straggler_finish(strag, corpus, k, remaining, corpus.count())
         )
     unresolved.unpersist()
 

@@ -50,11 +50,6 @@ _DEFAULTS = {
 }
 
 
-_IO_CODEC = os.environ.get("COVERGRID_IO_CODEC")
-if _IO_CODEC:
-    _DEFAULTS["spark.io.compression.codec"] = _IO_CODEC
-
-
 def get_spark(
     master: str | None = None,
     app_name: str = "spark-covergrid",

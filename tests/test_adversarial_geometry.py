@@ -15,12 +15,10 @@ import pandas as pd
 import pytest
 
 from parallelcovertree_spark.operators.epsilon_join import epsilon_self_join
-from parallelcovertree_spark.operators.knn import (
-    knn_join,
-    knn_join_block_kernel,
-    knn_join_grid_kernel,
-)
+from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 from parallelcovertree_spark.oracle import epsilon_graph_np, knn_np
+from parallelcovertree_spark.plans import query
+from parallelcovertree_spark.plans.covertree import build_cover_tree
 
 R = 1.25  # exact in binary floating point
 
@@ -56,31 +54,53 @@ def test_epsilon_half_plan_on_boundaries(spark):
     assert got == want
 
 
-@pytest.mark.parametrize("variant", [knn_join, knn_join_grid_kernel, knn_join_block_kernel])
+KNN_PLANS = {
+    "knn_join_block_kernel": knn_join_block_kernel,
+    "two_table": lambda df, k: knn_join_block_kernel(df, k=k, queries=df),
+    "tree_knn": lambda df, k: query.tree_knn(
+        build_cover_tree(df, hub_cutoff=4), df, k=k),
+}
+
+
+@pytest.mark.parametrize("variant", KNN_PLANS)
 def test_knn_variants_on_boundaries(spark, variant):
     pdf = _adversarial_pdf()
     df = spark.createDataFrame(pdf)
-    got = {(r.src, r.nbr_rank, r.dst) for r in variant(df, k=4).collect()}
+    got = {(r.src, r.nbr_rank, r.dst) for r in KNN_PLANS[variant](df, k=4).collect()}
     assert got == knn_np(pdf, k=4)
+
+
+@pytest.mark.parametrize("bcast_queries", [0, 10**9], ids=["cogroup", "broadcast"])
+def test_tree_epsilon_graph_stage2_regimes_on_boundaries(spark, monkeypatch, bcast_queries):
+    """Both stage-2 finishes of the routed radius query (cogroup and
+    broadcast join) give the exact ε-graph on the lattice: pairs at exactly
+    r, points on cell seams, duplicates."""
+    monkeypatch.setattr(query, "ROUTE_BCAST_QUERIES", bcast_queries)
+    pdf = _adversarial_pdf()
+    model = build_cover_tree(spark.createDataFrame(pdf), hub_cutoff=4)
+    assert model.local_trees is not None  # stage 2 is reached
+    got = {(r.src, r.dst) for r in query.tree_epsilon_graph(model, R).collect()}
+    assert got == epsilon_graph_np(pdf, R)
 
 
 def test_knn_block_seam_diagonal_certification(spark):
     """Block-seam × certification interplay (VERDICT r2 next #8): a query in
-    the CORNER core cell of block (0,0) certifies with ≥ k own-cell
+    the CORNER core cell of a block certifies with ≥ k own-cell
     candidates within r, but its true nearest neighbor sits diagonally
-    across the block seam in block (1,1) — only the 1-cell halo of the
+    across the block seam in the next block — only the 1-cell halo of the
     diagonal block carries it. A missing diagonal-halo replica would not
     fail certification; it would silently return the wrong top-k, so the
     assertion is against the exact numpy oracle.
 
-    Geometry (all f32-exact): r0=0.5, cell_factor=2 → cell s=1.0, B=16 →
-    seam at x=y=16. Query (15.9375, 15.9375); diagonal point (16.0625,
-    16.0625) at d≈0.177 ≤ r; three own-cell points at d=0.25-0.375 certify
-    k=3 within r."""
+    Geometry (all f32-exact): r0=0.5 → cell s=0.5, B=16 → block side 8,
+    seam at x=y=16 between blocks (1,1) and (2,2). Query (15.9375, 15.9375)
+    sits in block (1,1)'s corner cell; diagonal point (16.0625, 16.0625) at
+    d≈0.177 ≤ r; three own-cell points at d=0.25-0.375 certify k=3 within
+    r."""
     q = (15.9375, 15.9375)
     pts = [
         q,
-        (16.0625, 16.0625),              # true NN, diagonal block (1,1)
+        (16.0625, 16.0625),              # true NN, diagonal block (2,2)
         (15.6875, 15.9375),              # own-cell, d=0.25
         (15.9375, 15.625),               # own-cell, d=0.3125
         (15.5625, 15.9375),              # own-cell, d=0.375
@@ -98,7 +118,7 @@ def test_knn_block_seam_diagonal_certification(spark):
     df = spark.createDataFrame(pdf)
     got = {
         (r.src, r.nbr_rank, r.dst)
-        for r in knn_join_block_kernel(df, k=3, r0=0.5, block_cells=16).collect()
+        for r in knn_join_block_kernel(df, k=3, r0=0.5).collect()
     }
     want = knn_np(pdf, k=3)
     assert got == want

@@ -52,7 +52,7 @@ def test_registry_ops_do_not_accumulate_cache(spark):
 
 
 def test_knn_and_tree_knn_release_caches(spark):
-    from parallelcovertree_spark.operators.knn import knn_join, knn_join_grid_kernel
+    from parallelcovertree_spark.operators.knn import knn_join_block_kernel
     from parallelcovertree_spark.plans.covertree import build_cover_tree
     from parallelcovertree_spark.plans.query import tree_knn
     from parallelcovertree_spark.sources.synthetic import synthetic_points
@@ -60,10 +60,12 @@ def test_knn_and_tree_knn_release_caches(spark):
     pts = synthetic_points(spark, 300)
 
     def sweep():
-        knn_join(pts, k=5).count()
-        knn_join_grid_kernel(pts, k=5).count()
+        knn_join_block_kernel(pts, k=5).count()
+        # tiny r0: radius rounds plus the straggler finish, two-table form
+        knn_join_block_kernel(pts, k=5, r0=0.01, queries=pts).count()
         model = build_cover_tree(pts, hub_cutoff=8)
         tree_knn(model, pts, k=5).count()
+        tree_knn(model, pts, k=5, r0=0.01, max_rounds=1).count()
 
     sweep()
     baseline = _settle(spark, 0)

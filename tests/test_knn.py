@@ -1,10 +1,10 @@
-"""kNN engine (ring expansion) vs exact numpy oracle (k=10 north star)."""
+"""kNN block kernel (adaptive radius) vs exact numpy oracle (k=10 north star)."""
 
 from __future__ import annotations
 
 import pytest
 
-from parallelcovertree_spark.operators.knn import knn_brute_force, knn_join
+from parallelcovertree_spark.operators.knn import knn_brute_force, knn_join_block_kernel
 from parallelcovertree_spark.oracle import knn_np
 from parallelcovertree_spark.sources.synthetic import (
     gaussian_points_np,
@@ -15,17 +15,17 @@ from parallelcovertree_spark.sources.synthetic import (
 @pytest.mark.parametrize("n,k", [(100, 10), (500, 10), (500, 3)])
 def test_knn_matches_oracle(spark, n, k):
     pts = synthetic_points(spark, n).persist()
-    got = {(r.src, r.nbr_rank, r.dst) for r in knn_join(pts, k=k).collect()}
+    got = {(r.src, r.nbr_rank, r.dst) for r in knn_join_block_kernel(pts, k=k).collect()}
     want = knn_np(gaussian_points_np(n), k=k)
     assert got == want
     pts.unpersist()
 
 
 def test_knn_small_r0_forces_expansion(spark):
-    """Start with a uselessly small radius: ring expansion must still converge
-    to the exact answer."""
+    """Start with a uselessly small radius: radius doubling plus the
+    straggler finish must still converge to the exact answer."""
     pts = synthetic_points(spark, 200).persist()
-    got = {(r.src, r.nbr_rank, r.dst) for r in knn_join(pts, k=5, r0=0.01).collect()}
+    got = {(r.src, r.nbr_rank, r.dst) for r in knn_join_block_kernel(pts, k=5, r0=0.01).collect()}
     want = knn_np(gaussian_points_np(200), k=5)
     assert got == want
     pts.unpersist()

@@ -1,34 +1,79 @@
-"""All three kNN physical plans agree with the exact oracle."""
+"""Every exact 2-D kNN plan — the block kernel's self-join and two-table
+forms and the cover-tree-routed ``tree_knn`` — agrees with the exact oracle,
+on both sides of each plan switch."""
 
 from __future__ import annotations
 
 import pytest
 
-from parallelcovertree_spark.operators.knn import (
-    knn_join_block_kernel,
-    knn_join,
-    knn_join_grid_kernel,
-    knn_join_jvm_arrays,
-)
+from parallelcovertree_spark.operators import knn
+from parallelcovertree_spark.operators.knn import knn_join_block_kernel
 from parallelcovertree_spark.oracle import knn_np
+from parallelcovertree_spark.plans.covertree import build_cover_tree
+from parallelcovertree_spark.plans.query import tree_knn
 from parallelcovertree_spark.sources.synthetic import (
     gaussian_points_np,
     synthetic_points,
 )
 
 
-@pytest.mark.parametrize("variant", [knn_join, knn_join_grid_kernel, knn_join_block_kernel, knn_join_jvm_arrays])
-def test_variants_match_oracle(spark, variant):
+def two_table(pts, k, **kw):
+    """The block kernel's queries × corpus form, querying the corpus itself."""
+    return knn_join_block_kernel(pts, k=k, queries=pts, **kw)
+
+
+def tree(pts, k, **kw):
+    return tree_knn(build_cover_tree(pts, hub_cutoff=8), pts, k=k, **kw)
+
+
+def tree_one_round(pts, k, **kw):
+    """One radius round, so the shared straggler finish answers the rest."""
+    return tree(pts, k, max_rounds=1, **kw)
+
+
+PLANS = {
+    "knn_join_block_kernel": knn_join_block_kernel,
+    "two_table": two_table,
+    "tree_knn": tree,
+    "tree_knn_one_round": tree_one_round,
+}
+
+
+@pytest.mark.parametrize("plan", PLANS)
+def test_variants_match_oracle(spark, plan):
     pts = synthetic_points(spark, 400).persist()
-    got = {(r.src, r.nbr_rank, r.dst) for r in variant(pts, k=10).collect()}
+    got = {(r.src, r.nbr_rank, r.dst) for r in PLANS[plan](pts, k=10).collect()}
     assert got == knn_np(gaussian_points_np(400), k=10)
     pts.unpersist()
 
 
-def test_jvm_arrays_forced_expansion(spark):
-    """Tiny r0 → multi-round + straggler fallback path."""
+def test_two_table_forced_expansion(spark):
+    """Tiny r0 → multi-round + straggler finish in the two-table form."""
     pts = synthetic_points(spark, 200)
-    got = {(r.src, r.nbr_rank, r.dst) for r in knn_join_jvm_arrays(pts, k=5, r0=0.01).collect()}
+    got = {(r.src, r.nbr_rank, r.dst) for r in two_table(pts, k=5, r0=0.01).collect()}
+    assert got == knn_np(gaussian_points_np(200), k=5)
+
+
+@pytest.mark.parametrize("bcast_pairs", [0, float("inf")],
+                         ids=["partial_topk", "broadcast_window"])
+@pytest.mark.parametrize("plan", ["knn_join_block_kernel", "two_table", "tree_knn_one_round"])
+def test_straggler_finish_both_sides(spark, monkeypatch, plan, bcast_pairs):
+    """Force each side of the straggler finish's pair-count switch: a tiny
+    r0 leaves stragglers after the first round, and either finish must give
+    the oracle's answer."""
+    monkeypatch.setattr(knn, "STRAGGLER_BCAST_PAIRS", bcast_pairs)
+    finish = knn.knn_straggler_finish
+    seen = []
+
+    def spy(strag, corpus, k, n_strag, n_corpus, mask_same=True):
+        seen.append(n_strag)
+        return finish(strag, corpus, k, n_strag, n_corpus, mask_same)
+
+    monkeypatch.setattr(knn, "knn_straggler_finish", spy)
+    pts = synthetic_points(spark, 200)
+    got = {(r.src, r.nbr_rank, r.dst)
+           for r in PLANS[plan](pts, k=5, r0=0.01).collect()}
+    assert seen and seen[0] > 0
     assert got == knn_np(gaussian_points_np(200), k=5)
 
 
